@@ -56,9 +56,9 @@ def _driver_verified() -> set[str]:
 _ROUND_CHANGED = [
     # round 5: new queries (LPA communities, LSH edit-distance verify,
     # multi-index SRP hamming, KS drift, exact-integer correlations,
-    # lang-ID confusion matrix)
+    # lang-ID confusion matrix, Adamic-Adar)
     "wg_lpa", "dd_edit_verify", "ann_srp_hamming", "tx_ks_drift",
-    "tx_signal_corr", "tx_lang_confusion",
+    "tx_signal_corr", "tx_lang_confusion", "wg_adamic_adar",
     # behavior changed AFTER the r04 artifact was recorded (the
     # post-round-4 advisor fixes: random_walks seed delimiting, base64
     # UTF-8 validation, bootstrap zero-weight NULL, idempotent bucketed

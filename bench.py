@@ -127,8 +127,11 @@ def _session(cores: int, aqe: bool = True):
 
 def _pipeline_df(spark, pages_path: str):
     """The flagship DAG over a parquet pages table: routed events → per-
-    (sink, hour) aggregates. Materializing the aggregate forces the full
-    multiline/grok/validate/enrich/route work on every row."""
+    (sink, hour) aggregates. Materializing the aggregate runs multiline,
+    grok, validate and route on every row, but Catalyst prunes what the
+    aggregate does not read: the enrichment lookups and the ``tags`` map
+    drop out of the executed plan, and ``lang`` is never scanned. It is the
+    sink-hour aggregate's cost, not the cost of a full ``run_batch``."""
     from logsight_filebeat_spark.entry_queries_corpus import _pages_plan
     from logsight_filebeat_spark.operators.aggregate import sink_hour_aggregates
 

@@ -16,6 +16,8 @@ an unmatched host contributes NO tags, never a NULL tag value.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -38,44 +40,55 @@ def add_fields(df: DataFrame, fields: dict[str, str], tags_col: str = "tags") ->
     return df.withColumn(tags_col, F.map_concat(F.col(tags_col), lit_map))
 
 
-def enrich_with_lookup(
-    df: DataFrame,
+def _merge_tags(tags_col: str, values: dict[str, Column]) -> Column:
+    """``tags_col`` plus {tag_key: value} for every non-NULL value."""
+    entries = [
+        F.struct(F.lit(k).alias("key"), v.alias("value"))
+        for k, v in sorted(values.items())
+    ]
+    arr = F.filter(F.array(*entries), lambda e: e.getField("value").isNotNull())
+    return F.map_concat(F.col(tags_col), F.map_from_entries(arr))
+
+
+def compile_lookup(
     lookup: DataFrame,
     on: str | Column,
     tag_cols: dict[str, str],
     tags_col: str = "tags",
     lookup_key: str | None = None,
     max_literal_entries: int | None = 64,
-) -> DataFrame:
-    """Enrich from a lookup table, folding selected lookup columns into
-    the tags map as {tag_key: value}; rows with no match (or NULL values)
-    get no entry — skip-on-missing, mapper.go:103-106.
+) -> Callable[[DataFrame], DataFrame]:
+    """Compile one lookup enrichment into a ``DataFrame -> DataFrame``
+    function that folds selected lookup columns into the tags map as
+    {tag_key: value}; rows with no match (or NULL values) get no entry —
+    skip-on-missing, mapper.go:103-106.
 
     ``on``: fact-side join column (name or expression, e.g. url_host()).
     ``tag_cols``: {tag_key_out: lookup_column_in}.
     ``lookup_key``: lookup-side key column (default: same name as ``on``).
 
-    Two physical strategies, picked here on the driver:
+    Two physical strategies, picked here on the driver, once:
 
     * **literal map** — when the lookup has ≤ ``max_literal_entries``
       unique-keyed rows (probed with one bounded ``limit(n+1).collect()``
-      at plan-build time), the whole table compiles into ``create_map``
+      HERE, at compile time), the whole table compiles into ``create_map``
       literals and the probe is ``element_at`` INSIDE the scan's
       whole-stage codegen: no join operator, no broadcast exchange, no
-      build side. End-to-end the flagship pipeline times the same either
-      way at test scale (the broadcast build is tiny); what the literal
-      form buys is plan shape — the whole map stage stays ONE shuffle-free
-      codegen projection (pinned in test_plans_explain), each STACKED
-      lookup adds zero operators where a join adds an exchange + build
-      per processor (real Beats configs chain many translate/add_fields),
-      and count()-style partial evaluations can prune through it. Beats
-      lookups are config-sized, so this is the hot path's default.
+      build side. What the literal form buys is plan shape — the whole map
+      stage stays ONE shuffle-free codegen projection (pinned in
+      test_plans_explain), each STACKED lookup adds zero operators where a
+      join adds an exchange + build per processor (real Beats configs
+      chain many translate/add_fields), and count()-style partial
+      evaluations can prune through it. Beats lookups are config-sized, so
+      this is the hot path's default. The table is read once per compiled
+      function, as the reference builds its mapper tree once
+      (plugin/client.go:28-96): to pick up a changed table, compile again.
     * **broadcast hash join** — anything larger (or duplicate-keyed,
       where join semantics duplicate fact rows and a map cannot), the
-      classic broadcast left join. Pass ``max_literal_entries=None`` to
-      force it.
+      classic broadcast left join. It stays lazy: every application reads
+      the lookup table afresh. Pass ``max_literal_entries=None`` to force
+      it (no probe runs then).
     """
-    join_col = df[on] if isinstance(on, str) else on
     key = lookup_key or (on if isinstance(on, str) else None)
     if key is None:
         raise ValueError("lookup_key required when `on` is an expression")
@@ -86,46 +99,55 @@ def enrich_with_lookup(
         probe = small.limit(max_literal_entries + 1).collect()
         keys = [r[key] for r in probe]
         if len(probe) <= max_literal_entries and len(set(keys)) == len(keys):
-            entries = []
-            for tag_key, src in sorted(tag_cols.items()):
+            join_col = F.col(on) if isinstance(on, str) else on
+            values = {}
+            for tag_key, src in tag_cols.items():
                 pairs = [
                     x
                     for r in probe
                     if r[key] is not None
                     for x in (F.lit(r[key]), F.lit(r[src]))
                 ]
-                val = (
+                values[tag_key] = (
                     F.element_at(F.create_map(*pairs), join_col)
                     if pairs
                     else F.lit(None).cast("string")
                 )
-                entries.append(
-                    F.struct(
-                        F.lit(tag_key).alias("key"), val.alias("value")
-                    )
-                )
-            arr = F.filter(
-                F.array(*entries),
-                lambda e: e.getField("value").isNotNull(),
-            )
-            new_tags = F.map_concat(
-                F.col(tags_col), F.map_from_entries(arr)
-            )
-            return df.withColumn(tags_col, new_tags)
+            new_tags = _merge_tags(tags_col, values)
+            return lambda df: df.withColumn(tags_col, new_tags)
 
-    joined = df.join(
-        F.broadcast(small), join_col == small[key], "left"
-    ).drop(small[key])
+    new_tags = _merge_tags(tags_col, {k: F.col(src) for k, src in tag_cols.items()})
 
-    entries = [
-        F.struct(F.lit(tag_key).alias("key"), F.col(src).alias("value"))
-        for tag_key, src in sorted(tag_cols.items())
-    ]
-    arr = F.filter(F.array(*entries), lambda e: e.getField("value").isNotNull())
-    new_tags = F.map_concat(F.col(tags_col), F.map_from_entries(arr))
-    return joined.withColumn(tags_col, new_tags).drop(
-        *[c for c in set(tag_cols.values()) if c in joined.columns and c not in df.columns]
-    )
+    def broadcast_join(df: DataFrame) -> DataFrame:
+        join_col = df[on] if isinstance(on, str) else on
+        joined = df.join(
+            F.broadcast(small), join_col == small[key], "left"
+        ).drop(small[key])
+        return joined.withColumn(tags_col, new_tags).drop(
+            *[c for c in set(tag_cols.values()) if c in joined.columns and c not in df.columns]
+        )
+
+    return broadcast_join
+
+
+def enrich_with_lookup(
+    df: DataFrame,
+    lookup: DataFrame,
+    on: str | Column,
+    tag_cols: dict[str, str],
+    tags_col: str = "tags",
+    lookup_key: str | None = None,
+    max_literal_entries: int | None = 64,
+) -> DataFrame:
+    """Enrich ``df`` from a lookup table in one call: ``compile_lookup``
+    (see there for the arguments and the two physical strategies) applied
+    once. The literal-map probe therefore runs on every call; a pipeline
+    that enriches batch after batch compiles its lookups once instead
+    (``PipelinePlan``) and reads a config-sized table once per plan."""
+    return compile_lookup(
+        lookup, on, tag_cols, tags_col=tags_col, lookup_key=lookup_key,
+        max_literal_entries=max_literal_entries,
+    )(df)
 
 
 def filter_blocked_hosts(

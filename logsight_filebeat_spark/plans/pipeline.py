@@ -4,13 +4,15 @@ Reference: makeLogsight (/root/reference/plugin/logsight.go:19-64) parses and
 validates config, NewClient (/root/reference/plugin/client.go:28-96) wires the
 mapper tree once, SuccessNet/WithBackoff fix the physical batch/retry policy.
 All of that happens on the driver, before any event flows — we keep exactly
-that split: ``compile()`` raises every config error eagerly and builds Column
-expressions; ``run_batch()`` is the hot path (plugin/client.go:112-129).
+that split: ``compile()`` raises every config error eagerly, builds Column
+expressions, and compiles each enrichment lookup once (a config-sized table
+is read there, once, into literal maps); ``run_batch()`` is the hot path
+(plugin/client.go:112-129) and runs no driver-side probe of its own.
 
 Dataflow per batch (all-Column except the optional vectorized grok stage):
 
   scan(pages) → [multiline explode] → grok parse → to_log (map + validate)
-  → enrich (broadcast joins) → route → ONE persisted DF
+  → enrich (compiled literal maps / broadcast joins) → route → ONE persisted DF
   → { routed write (partitioned by batch, sink), sink-hour aggregates,
       receipts, lineage commit }
 
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +34,7 @@ from pyspark.storagelevel import StorageLevel
 from logsight_filebeat_spark.config import PipelineConfig
 from logsight_filebeat_spark.operators import parse as parse_ops
 from logsight_filebeat_spark.operators.aggregate import receipts, sink_hour_aggregates
-from logsight_filebeat_spark.operators.enrich import enrich_with_lookup, url_host
+from logsight_filebeat_spark.operators.enrich import compile_lookup, url_host
 from logsight_filebeat_spark.operators.log_mapper import ERROR_COL, to_log
 from logsight_filebeat_spark.operators.parse import (
     CompiledGrok,
@@ -66,6 +69,16 @@ class PipelinePlan:
     vectorized: bool = False  # grok via mapInPandas instead of native Columns
     lookups: list[Lookup] = field(default_factory=list)
     event_ts_col: str = "warc_ts"
+    _enrichers: list[Callable[[DataFrame], DataFrame]] = field(
+        init=False, repr=False
+    )
+
+    def __post_init__(self) -> None:
+        # the plan-build probes run here, once per plan, not per batch
+        self._enrichers = [
+            compile_lookup(lk.table, lk.on, lk.tag_cols, lookup_key=lk.lookup_key)
+            for lk in self.lookups
+        ]
 
     # ---- logical plan (no actions) -------------------------------------
     def parsed(self, pages: DataFrame) -> DataFrame:
@@ -90,10 +103,8 @@ class PipelinePlan:
     def mapped(self, pages: DataFrame) -> DataFrame:
         df = self.parsed(pages)
         df = to_log(df, self.cfg, event_ts_col=self.event_ts_col)
-        for lk in self.lookups:
-            df = enrich_with_lookup(
-                df, lk.table, lk.on, lk.tag_cols, lookup_key=lk.lookup_key
-            )
+        for enrich in self._enrichers:
+            df = enrich(df)
         return route(df, self.cfg)
 
     # ---- physical execution (actions) ----------------------------------
@@ -103,12 +114,11 @@ class PipelinePlan:
         pages: DataFrame,
         batch_id: str,
         sink_root: str | None = None,
-        write: bool = True,
     ) -> dict:
         """Publish one batch (plugin/client.go:112-129): map, segregate,
         write, account, ACK. Returns the receipt summary."""
         root = sink_root or self.cfg.sink_root
-        if write and lineage_ops.is_committed(spark, root, batch_id):
+        if lineage_ops.is_committed(spark, root, batch_id):
             return {"batch_id": batch_id, "skipped": True}  # registrar resume
 
         routed = self.mapped(pages).withColumn("batch_id", F.lit(batch_id))
@@ -116,31 +126,29 @@ class PipelinePlan:
         try:
             agg = sink_hour_aggregates(routed, ts_col=self.event_ts_col)
             rec = receipts(routed, batch_id)
-            if write:
-                write_routed(
-                    routed.select(
-                        "batch_id", SINK_COL, "timestamp", "message", "level",
-                        "tags", ERROR_COL, "url", self.event_ts_col,
-                    ),
-                    root,
-                    partition_cols=("batch_id", SINK_COL),
-                    target_file_rows=self.cfg.batch_size * 1000,
-                )
-                agg.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                    "append"
-                ).parquet(os.path.join(root, "metrics"))
-                rec.write.mode("append").parquet(os.path.join(root, "receipts"))
+            write_routed(
+                routed.select(
+                    "batch_id", SINK_COL, "timestamp", "message", "level",
+                    "tags", ERROR_COL, "url", self.event_ts_col,
+                ),
+                root,
+                partition_cols=("batch_id", SINK_COL),
+                target_file_rows=self.cfg.batch_size * 1000,
+            )
+            agg.withColumn("batch_id", F.lit(batch_id)).write.mode(
+                "append"
+            ).parquet(os.path.join(root, "metrics"))
+            rec.write.mode("append").parquet(os.path.join(root, "receipts"))
 
             totals = routed.agg(
                 F.sum(F.when(F.col(ERROR_COL).isNull(), 1).otherwise(0)).alias("ok"),
                 F.sum(F.when(F.col(ERROR_COL).isNotNull(), 1).otherwise(0)).alias("failed"),
                 F.sum(F.coalesce(F.octet_length("message"), F.lit(0))).alias("bytes"),
             ).first()
-            if write:
-                lineage_ops.commit_batch(  # the ACK — after data is durable
-                    spark, root, batch_id,
-                    int(totals.ok or 0), int(totals.failed or 0), int(totals.bytes or 0),
-                )
+            lineage_ops.commit_batch(  # the ACK — after data is durable
+                spark, root, batch_id,
+                int(totals.ok or 0), int(totals.failed or 0), int(totals.bytes or 0),
+            )
             return {
                 "batch_id": batch_id,
                 "skipped": False,
@@ -168,7 +176,14 @@ def compile(
     event (real corpora are heterogeneous; a single pattern quarantines
     every other line format). The mapper keys (cfg.message_key etc.) address
     the union field schema — a field the winning pattern lacks is NULL,
-    which the validation stage turns into a per-row failure as usual."""
+    which the validation stage turns into a per-row failure as usual.
+
+    Each of ``lookups`` is compiled here, after every config check, so a
+    config error still raises before any Spark job. A config-sized lookup
+    table (the literal-map strategy of ``operators.enrich.compile_lookup``)
+    is read once, now, as the reference builds its mapper tree once: to
+    pick up a changed table, compile the plan again. Lookups large enough
+    for the broadcast join still read their table on every batch."""
     cfg.validate()
     if isinstance(grok_pattern, (list, tuple)):
         grok: CompiledGrok | CompiledGrokSet = compile_grok_set(list(grok_pattern))

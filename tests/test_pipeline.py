@@ -86,6 +86,66 @@ def test_run_batch_writes_and_commits(plan, spark, tmp_path):
     receipts = spark.read.parquet(f"{root}/receipts")
     assert receipts.count() > 0
     assert lineage_ops.is_committed(spark, root, "b0")
+    # the ACK row round-trips exactly, its counts as longs
+    lin = lineage_ops.read_lineage(spark, root)
+    assert dict(lin.dtypes) == {
+        "batch_id": "string", "status": "string",
+        "rows_ok": "bigint", "rows_failed": "bigint", "byte_total": "bigint",
+    }
+    assert [tuple(r) for r in lin.collect()] == [
+        ("b0", "committed", res["rows_ok"], res["rows_failed"], res["byte_total"])
+    ]
+
+
+def test_commit_batch_round_trips_counts_beyond_int32(spark, tmp_path):
+    root = str(tmp_path / "sinks")
+    lineage_ops.commit_batch(spark, root, "big", 2**33, 7, 2**40)
+    assert [tuple(r) for r in lineage_ops.read_lineage(spark, root).collect()] == [
+        ("big", "committed", 2**33, 7, 2**40)
+    ]
+
+
+def _job_count(spark, label: str, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(label, label)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(label))
+
+
+# A warm run_batch (lineage table present, nothing skipped) runs exactly:
+# rerun guard 2 (distinct under AQE), routed write 1, sink-hour metrics
+# append 2, receipts append 2, totals 2, lineage ACK 1. A lookup probe per
+# batch would raise it.
+RUN_BATCH_JOBS = 10
+
+
+def test_lookups_probe_at_compile_and_run_batch_job_count(spark, tmp_path, monkeypatch):
+    """compile() probes each config-sized lookup once; mapping a batch then
+    runs no Spark job, and a warm run_batch runs a pinned number of them
+    without shipping any row from Python (the ACK is built on the JVM)."""
+    from logsight_filebeat_spark.entry_queries_corpus import _pages_plan
+
+    plan = _pages_plan(spark)  # the flagship plan: host_meta + lang_meta lookups
+    tag = tmp_path.name
+    assert _job_count(spark, f"{tag}-mapped", lambda: plan.mapped(pages(spark, 300))) == 0
+
+    root = str(tmp_path / "sinks")
+    plan.run_batch(spark, pages(spark, 300, seed=5), "j0", sink_root=root)
+    batch = pages(spark, 300, seed=6)
+
+    def no_python_rows(*_a, **_k):
+        raise AssertionError("run_batch built a DataFrame from Python rows")
+
+    monkeypatch.setattr(spark, "createDataFrame", no_python_rows)
+    n = _job_count(
+        spark, f"{tag}-warm", lambda: plan.run_batch(spark, batch, "j1", sink_root=root)
+    )
+    assert n == RUN_BATCH_JOBS
 
 
 def test_rerun_skips_committed_batch(plan, spark, tmp_path):

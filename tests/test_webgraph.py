@@ -428,6 +428,28 @@ def test_adamic_adar_weights_and_caps(spark):
     assert w1 > w2
 
 
+def test_adamic_adar_repartition_stable(spark):
+    """aa_score is round(sum(double), 6), and a double sum depends on the
+    order its terms arrive in: one partition and seven must still agree.
+    Pairs here sum up to ~20 weights of mixed magnitude."""
+    edges = [
+        (f"s{i}", f"p{(i * 7 + j * 3) % 13}")
+        for i in range(40)
+        for j in range(2 + i % 9)
+    ]
+    edf = spark.createDataFrame(edges, "src string, dst string")
+
+    def scores(df):
+        return {
+            (r.a, r.b): (r.common, r.aa_score)
+            for r in wg.adamic_adar(df, max_out_degree=10).collect()
+        }
+
+    one = scores(edf.repartition(1))
+    assert max(c for c, _ in one.values()) >= 10
+    assert scores(edf.repartition(7)) == one
+
+
 def test_adamic_adar_rejects_bad_cap():
     with pytest.raises(ValueError):
         wg.adamic_adar(None, max_out_degree=1)
